@@ -1,18 +1,28 @@
-"""Spark extraction stage: pages -> triples / errors DataFrames.
+"""Spark extraction stage: pages -> triples / errors / text DataFrames.
 
-The reference's per-document recursive parse
-(lib/RDF/RDFa/Parser.pm:489-544) becomes one Arrow-batched
-``mapInPandas`` over the pages table: JVM->Python crossings happen
-once per batch, and the whole relational surface around the UDF
-(column pruning, filters, dedup, writes) stays in Catalyst.
+The reference parses each document once and reads the triples, the
+processor-graph errors and the text off that one parse
+(lib/RDF/RDFa/Parser.pm:489-544, 2541-2559).  Here that parse lives in
+one Arrow kernel, ``_extract``, run by ``mapInArrow`` over the
+(url, html) projection of the pages table.  Each public extractor is
+that kernel asked for a set of row kinds: ``extract_triples`` 't',
+``extract_errors`` 'e', ``extract_text_df`` 'x' and ``extract_all``
+all three, with a ``kind`` column because it mixes them.
+
+Failure rule, the same for every extractor: a page whose parse raises
+emits one (level='error', code='parse-failed') row if errors were
+asked for and nothing else, and adds 1 to the ``parse_failures``
+accumulator of ``extract_triples``.  A null html emits nothing.
 
 Scale notes (100 TB design):
 * extraction is embarrassingly parallel per url — no shuffle at all
   in this stage; parallelism == input splits
   (`spark.sql.files.maxPartitionBytes` governs task count);
-* the UDF reads only (url, html, lang): column pruning reaches the
-  parquet scan because mapInPandas consumes an explicit 3-column
-  projection;
+* the kernel reads only (url, html): column pruning reaches the
+  parquet scan through that explicit 2-column projection;
+* each Arrow batch is parsed in zero-copy row slices capped at
+  ``_ARROW_CHUNK_BYTES`` of html, so worker memory is bounded by the
+  cap, not by the page or batch size;
 * bnode labels are deterministic per url, so re-running a failed
   partition yields identical output — required for resumable,
   idempotent writes (BASELINE north_rule).
@@ -20,10 +30,6 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-import os
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BooleanType, IntegerType, LongType,
@@ -31,32 +37,6 @@ from pyspark.sql.types import (BooleanType, IntegerType, LongType,
 
 from .core.config import Config, make_config
 from .core.walk import parse_rdfa
-
-TRIPLE_SCHEMA = StructType([
-    StructField("url", StringType(), False),
-    StructField("subj", StringType(), True),
-    StructField("pred", StringType(), True),
-    StructField("obj", StringType(), True),
-    StructField("obj_is_literal", BooleanType(), True),
-    StructField("obj_datatype", StringType(), True),
-    StructField("obj_lang", StringType(), True),
-    StructField("graph", StringType(), True),
-    StructField("emit_seq", LongType(), True),
-])
-
-ERROR_SCHEMA = StructType([
-    StructField("url", StringType(), False),
-    StructField("level", StringType(), True),
-    StructField("code", StringType(), True),
-    StructField("message", StringType(), True),
-    StructField("node_path", StringType(), True),
-])
-
-TEXT_SCHEMA = StructType([
-    StructField("url", StringType(), False),
-    StructField("text", StringType(), True),
-    StructField("n_triples", IntegerType(), True),
-])
 
 # Single-pass multi-output layout: one parse per page emits triple
 # rows (kind='t'), processor-graph error rows (kind='e') and one text/
@@ -83,23 +63,47 @@ EXTRACT_ALL_SCHEMA = StructType([
     StructField("n_triples", IntegerType(), True),
 ])
 
+# The columns after (url, kind), by the row kind that fills them; the
+# kernel's row tuples are (url, *these columns).
+_KIND_FIELDS = {"t": EXTRACT_ALL_SCHEMA.fields[2:10],
+                "e": EXTRACT_ALL_SCHEMA.fields[10:14],
+                "x": EXTRACT_ALL_SCHEMA.fields[14:]}
 
-def detect_config(html: bytes) -> Config:
-    """Host-language dispatch for pre-crawled pages.
+
+def _schema(kinds) -> StructType:
+    """Output schema for a set of row kinds: url, kind (only when more
+    than one kind is emitted), then each kind's columns."""
+    head = EXTRACT_ALL_SCHEMA.fields[:2 if len(kinds) > 1 else 1]
+    return StructType(head + [f for k, fs in _KIND_FIELDS.items()
+                              if k in kinds for f in fs])
+
+
+TRIPLE_SCHEMA = _schema("t")
+ERROR_SCHEMA = _schema("e")
+TEXT_SCHEMA = _schema("x")
+
+
+def _sniff(html: bytes) -> tuple[str, str]:
+    """(host language, RDFa version) for a pre-crawled page.
 
     The reference dispatches on HTTP media type
-    (Config.pm:306-331); for a crawl corpus we sniff the bytes:
-    XML declaration or an XHTML namespace on the root -> xhtml host,
-    anything else -> html5 tag-soup.  Root @version still upgrades/
-    downgrades the RDFa version (guess mode, Config.pm:342-367).
+    (Config.pm:306-331); for a crawl corpus we sniff the bytes: ZIP
+    magic -> ODF package, XML declaration or an XHTML namespace on the
+    root -> xhtml host, anything else -> html5 tag-soup.  Root
+    @version still upgrades/downgrades the RDFa version (guess mode,
+    Config.pm:342-367).
     """
-    if html[:4] == b"PK\x03\x04":      # ZIP magic -> ODF package
-        return make_config("opendocument-zip", "1.1")
+    if html[:4] == b"PK\x03\x04":
+        return "opendocument-zip", "1.1"
     head = html[:2048].lstrip()
     is_xhtml = (head.startswith(b"<?xml")
                 or b'xmlns="http://www.w3.org/1999/xhtml"' in head)
-    host = "xhtml" if is_xhtml else "html5"
-    return make_config(host, "guess")
+    return ("xhtml" if is_xhtml else "html5"), "guess"
+
+
+def detect_config(html: bytes) -> Config:
+    """Host-language dispatch for pre-crawled pages (see ``_sniff``)."""
+    return make_config(*_sniff(html))
 
 
 _CFG_CACHE: dict[tuple, Config] = {}
@@ -108,35 +112,20 @@ _CFG_CACHE: dict[tuple, Config] = {}
 def _config_for(html: bytes, config: Config | None) -> Config:
     if config is not None:
         return config
-    if html[:4] == b"PK\x03\x04":      # ZIP magic: ODF package (S3)
-        key = ("opendocument-zip",)
-        cfg = _CFG_CACHE.get(key)
-        if cfg is None:
-            cfg = make_config(key[0], "1.1")
-            _CFG_CACHE[key] = cfg
-        return cfg
-    head = html[:2048].lstrip()
-    is_xhtml = (head.startswith(b"<?xml")
-                or b'xmlns="http://www.w3.org/1999/xhtml"' in head)
-    key = ("xhtml" if is_xhtml else "html5",)
+    key = _sniff(html)
     cfg = _CFG_CACHE.get(key)
     if cfg is None:
-        cfg = make_config(key[0], "guess")
-        _CFG_CACHE[key] = cfg
+        cfg = _CFG_CACHE[key] = make_config(*key)
     return cfg
 
-
-_TRIPLE_ARROW_NAMES = ["url", "subj", "pred", "obj", "obj_is_literal",
-                       "obj_datatype", "obj_lang", "graph", "emit_seq"]
 
 # Per-chunk cap on html bytes materialized as Python objects: an
 # incoming Arrow batch of max-size pages would otherwise be held
 # TWICE (Arrow buffer + to_pylist copies) alongside the full batch's
-# accumulated output lists.  Chunking bounds the Python-side peak to
+# accumulated output rows.  Chunking bounds the Python-side peak to
 # ~cap regardless of page sizes; the Arrow buffer itself is sliced
 # zero-copy.
-_ARROW_CHUNK_BYTES = int(os.environ.get(
-    "RDFA_SPARK_ARROW_CHUNK_BYTES", str(32 << 20)))
+_ARROW_CHUNK_BYTES = 32 << 20
 _ARROW_CHUNK_ROWS = 2048
 
 
@@ -158,202 +147,77 @@ def _chunk_bounds(lengths, max_bytes: int, max_rows: int):
     return bounds
 
 
-def _walk_arrow_batches(batches, config: Config | None, fail_acc=None):
-    """Arrow-native extraction: iterate RecordBatches, emit
-    RecordBatches — no pandas materialization on either side of the
-    JVM<->Python channel (mapInArrow).
+def _extract(batches, config: Config | None, kinds, fail_acc=None):
+    """The extraction kernel: Arrow (url, html) batches in, Arrow
+    batches of ``_schema(kinds)`` out, for ``kinds`` any of 't'
+    (triples), 'e' (errors) and 'x' (text).
 
-    Each incoming batch is processed in zero-copy row slices capped
-    at _ARROW_CHUNK_BYTES of html, so Python-object copies of the
-    pages and the in-flight output lists are bounded by the cap, not
-    by the batch size.
-
-    Parse failures emit no triple rows but are counted in
-    ``fail_acc`` (a Spark accumulator) — the no-silent-drops rule
-    holds on the fast path too.  Callers that need the failing urls
-    (not just a count) use ``extract_all`` + ``split_extracts``."""
-    import pyarrow as pa
+    Each incoming batch is cut by ``_chunk_bounds`` into zero-copy row
+    slices, and each page of a slice is parsed once.  Per slice, one
+    batch per requested kind is yielded (possibly empty), its other
+    kinds' columns all null.  A page whose parse raises adds 1 to
+    ``fail_acc`` (a Spark accumulator) when one is given; its only row
+    is a parse-failed error row, emitted when 'e' is requested."""
     import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
 
+    kinds = [k for k in _KIND_FIELDS if k in kinds]
+    schema = to_arrow_schema(_schema(kinds))
+    want_t, want_e, want_x = ("t" in kinds), ("e" in kinds), ("x" in kinds)
     for rb in batches:
-        url_idx = rb.schema.get_field_index("url")
-        html_idx = rb.schema.get_field_index("html")
-        if rb.num_rows == 0:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([], pa.string())] * 4
-                + [pa.array([], pa.bool_())]
-                + [pa.array([], pa.string())] * 3
-                + [pa.array([], pa.int64())],
-                names=_TRIPLE_ARROW_NAMES)
-            continue
+        url_col = rb.column(rb.schema.get_field_index("url"))
+        html_col = rb.column(rb.schema.get_field_index("html"))
         # per-row byte lengths straight from the Arrow offsets (no
         # data copy) drive the chunking
-        lens = pc.binary_length(rb.column(html_idx)).to_pylist()
+        lens = pc.binary_length(html_col).to_pylist()
         for lo, hi in _chunk_bounds(lens, _ARROW_CHUNK_BYTES,
                                     _ARROW_CHUNK_ROWS):
-            sub = rb.slice(lo, hi - lo)          # zero-copy
-            # bulk-convert the slice once (C loop) instead of
-            # per-row scalar .as_py() calls
-            urls = sub.column(url_idx).to_pylist()
-            htmls = sub.column(html_idx).to_pylist()
-            c_url, c_subj, c_pred, c_obj = [], [], [], []
-            c_lit, c_dt, c_lang, c_graph, c_seq = [], [], [], [], []
-            for i in range(sub.num_rows):
-                html = htmls[i]
+            rows = {k: [] for k in kinds}
+            for url, html in zip(url_col.slice(lo, hi - lo).to_pylist(),
+                                 html_col.slice(lo, hi - lo).to_pylist()):
                 if html is None:
                     continue
-                url = urls[i]
                 try:
-                    w = parse_rdfa(html, url,
-                                   _config_for(html, config))
-                except Exception:
+                    w = parse_rdfa(html, url, _config_for(html, config))
+                except Exception as exc:   # never fail the job on one page
                     if fail_acc is not None:
                         fail_acc.add(1)
+                    if want_e:
+                        rows["e"].append((url, "error", "parse-failed",
+                                          str(exc)[:500], None))
                     continue
-                for seq, t in enumerate(w.triples):
-                    c_url.append(url)
-                    c_subj.append(t.subj)
-                    c_pred.append(t.pred)
-                    c_obj.append(t.obj)
-                    c_lit.append(t.is_literal)
-                    c_dt.append(t.datatype)
-                    c_lang.append(t.lang)
-                    c_graph.append(t.graph)
-                    c_seq.append(seq)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c_url, pa.string()),
-                 pa.array(c_subj, pa.string()),
-                 pa.array(c_pred, pa.string()),
-                 pa.array(c_obj, pa.string()),
-                 pa.array(c_lit, pa.bool_()),
-                 pa.array(c_dt, pa.string()),
-                 pa.array(c_lang, pa.string()),
-                 pa.array(c_graph, pa.string()),
-                 pa.array(c_seq, pa.int64())],
-                names=_TRIPLE_ARROW_NAMES)
+                if want_t:
+                    rows["t"].extend(
+                        (url, t.subj, t.pred, t.obj, t.is_literal,
+                         t.datatype, t.lang, t.graph, seq)
+                        for seq, t in enumerate(w.triples))
+                if want_e:
+                    rows["e"].extend(
+                        (url, e.level, e.code, e.message, e.node_path)
+                        for e in w.errors)
+                if want_x:
+                    rows["x"].append(
+                        (url, w.doc.root.text_content()
+                         if w.doc.root is not None else "",
+                         len(w.triples)))
+            for kind, kind_rows in rows.items():
+                yield _block(schema, kind, kind_rows)
 
 
-def _walk_batches(batches: Iterator[pd.DataFrame], config: Config | None,
-                  want: str):
-    for pdf in batches:
-        urls, rows = pdf["url"].values, []
-        htmls = pdf["html"].values
-        for i in range(len(pdf)):
-            url = urls[i]
-            html = htmls[i]
-            if html is None:
-                continue
-            html = bytes(html)
-            try:
-                w = parse_rdfa(html, url, _config_for(html, config))
-            except Exception as exc:   # never fail the job on one page
-                if want == "errors":
-                    rows.append((url, "error", "parse-failed",
-                                 str(exc)[:500], None))
-                continue
-            if want == "triples":
-                for seq, t in enumerate(w.triples):
-                    rows.append((url, t.subj, t.pred, t.obj,
-                                 t.is_literal, t.datatype, t.lang,
-                                 t.graph, seq))
-            elif want == "errors":
-                for e in w.errors:
-                    rows.append((url, e.level, e.code, e.message,
-                                 e.node_path))
-            else:  # text
-                rows.append((url, w.doc.root.text_content()
-                             if w.doc.root is not None else "",
-                             len(w.triples)))
-        if want == "triples":
-            cols = [f.name for f in TRIPLE_SCHEMA.fields]
-        elif want == "errors":
-            cols = [f.name for f in ERROR_SCHEMA.fields]
-        else:
-            cols = [f.name for f in TEXT_SCHEMA.fields]
-        yield pd.DataFrame(rows, columns=cols)
-
-
-_ALL_ARROW_NAMES = [f.name for f in EXTRACT_ALL_SCHEMA.fields]
-
-
-def _walk_arrow_all(batches, config: Config | None):
-    """One parse per page, three row kinds out (triples 't', errors
-    'e', text/lineage 'x').  Parse failures always land as an error
-    row — pages can never vanish without a trace."""
+def _block(schema, kind: str, rows: list):
+    """One output RecordBatch of ``kind`` rows: the row tuples
+    transposed into the kind's own columns, every other column null."""
     import pyarrow as pa
 
-    for rb in batches:
-        urls = rb.column(rb.schema.get_field_index("url")).to_pylist()
-        htmls = rb.column(rb.schema.get_field_index("html")).to_pylist()
-        cols: list[list] = [[] for _ in _ALL_ARROW_NAMES]
-        (c_url, c_kind, c_subj, c_pred, c_obj, c_lit, c_dt, c_lang,
-         c_graph, c_seq, c_level, c_code, c_msg, c_path, c_text,
-         c_ntrip) = cols
-
-        def pad(n):
-            # fill every non-appended column with nulls to length n
-            for c in cols:
-                c.extend([None] * (n - len(c)))
-
-        for i in range(rb.num_rows):
-            html = htmls[i]
-            if html is None:
-                continue
-            url = urls[i]
-            try:
-                w = parse_rdfa(html, url, _config_for(html, config))
-            except Exception as exc:
-                c_url.append(url)
-                c_kind.append("e")
-                c_level.append("error")
-                c_code.append("parse-failed")
-                c_msg.append(str(exc)[:500])
-                pad(len(c_url))
-                continue
-            for seq, t in enumerate(w.triples):
-                c_url.append(url)
-                c_kind.append("t")
-                c_subj.append(t.subj)
-                c_pred.append(t.pred)
-                c_obj.append(t.obj)
-                c_lit.append(t.is_literal)
-                c_dt.append(t.datatype)
-                c_lang.append(t.lang)
-                c_graph.append(t.graph)
-                c_seq.append(seq)
-                pad(len(c_url))
-            for e in w.errors:
-                c_url.append(url)
-                c_kind.append("e")
-                c_level.append(e.level)
-                c_code.append(e.code)
-                c_msg.append(e.message)
-                c_path.append(e.node_path)
-                pad(len(c_url))
-            c_url.append(url)
-            c_kind.append("x")
-            c_text.append(w.doc.root.text_content()
-                          if w.doc.root is not None else "")
-            c_ntrip.append(len(w.triples))
-            pad(len(c_url))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(c_url, pa.string()),
-             pa.array(c_kind, pa.string()),
-             pa.array(c_subj, pa.string()),
-             pa.array(c_pred, pa.string()),
-             pa.array(c_obj, pa.string()),
-             pa.array(c_lit, pa.bool_()),
-             pa.array(c_dt, pa.string()),
-             pa.array(c_lang, pa.string()),
-             pa.array(c_graph, pa.string()),
-             pa.array(c_seq, pa.int64()),
-             pa.array(c_level, pa.string()),
-             pa.array(c_code, pa.string()),
-             pa.array(c_msg, pa.string()),
-             pa.array(c_path, pa.string()),
-             pa.array(c_text, pa.string()),
-             pa.array(c_ntrip, pa.int32())],
-            names=_ALL_ARROW_NAMES)
+    n = len(rows)
+    names = ["url"] + [f.name for f in _KIND_FIELDS[kind]]
+    cols = dict(zip(names, zip(*rows)))
+    return pa.RecordBatch.from_arrays(
+        [pa.array([kind] * n, f.type) if f.name == "kind"
+         else pa.array(cols[f.name], f.type) if f.name in cols
+         else pa.nulls(n, f.type)
+         for f in schema],
+        names=schema.names)
 
 
 def extract_all(pages: DataFrame,
@@ -366,9 +230,8 @@ def extract_all(pages: DataFrame,
     ``split_extracts``.  Parse failures appear as
     (kind='e', code='parse-failed') rows — never silently dropped.
     """
-    proj = pages.select("url", "html")
-    return proj.mapInArrow(
-        lambda it: _walk_arrow_all(it, config), EXTRACT_ALL_SCHEMA)
+    return pages.select("url", "html").mapInArrow(
+        lambda it: _extract(it, config, "tex"), EXTRACT_ALL_SCHEMA)
 
 
 def split_extracts(all_df: DataFrame) -> tuple[DataFrame, DataFrame,
@@ -394,26 +257,25 @@ def extract_triples(pages: DataFrame, config: Config | None = None,
     (the walker already dedups within a document, mirroring the
     reference's set-store A4) — a shuffle, so off by default.
 
-    Pages that fail to parse emit no triples but are never silently
-    lost: a Spark accumulator counts them, exposed as
-    ``result.parse_failures`` (read ``.value`` after an action).
-    Accumulators updated inside transformations are at-least-once
-    under task retries/speculation (standard Spark semantics), so
-    treat the count as a monitoring signal: nonzero means pages
-    failed.  For an exact, retry-safe audit — or the failing urls
-    themselves — use ``extract_all``, which materializes failures as
-    (kind='e', code='parse-failed') rows in the output itself.
+    A page that fails to parse emits no triples (the kernel's failure
+    rule), but it is never silently lost: a Spark accumulator counts
+    it, exposed as ``result.parse_failures`` (read ``.value`` after an
+    action).  Accumulators updated inside transformations are
+    at-least-once under task retries/speculation (standard Spark
+    semantics), so treat the count as a monitoring signal: nonzero
+    means pages failed.  For an exact, retry-safe audit — or the
+    failing urls themselves — use ``extract_all`` or
+    ``extract_errors``, which emit each failure as a
+    (code='parse-failed') error row in the output itself.
 
     ``parse_failures`` is an attribute of THIS DataFrame object only:
     any further transformation (select/filter/cache) returns a new
     DataFrame without it — capture the handle before transforming, or
     use ``extract_all`` for in-band accounting.
     """
-    proj = pages.select("url", "html")
     fail_acc = pages.sparkSession.sparkContext.accumulator(0)
-    out = proj.mapInArrow(
-        lambda it: _walk_arrow_batches(it, config, fail_acc),
-        TRIPLE_SCHEMA)
+    out = pages.select("url", "html").mapInArrow(
+        lambda it: _extract(it, config, "t", fail_acc), TRIPLE_SCHEMA)
     if dedup:
         out = out.dropDuplicates(
             ["url", "subj", "pred", "obj", "obj_is_literal",
@@ -425,18 +287,16 @@ def extract_triples(pages: DataFrame, config: Config | None = None,
 def extract_errors(pages: DataFrame,
                    config: Config | None = None) -> DataFrame:
     """Processor-graph analogue (Parser.pm:469-487) as a DataFrame."""
-    proj = pages.select("url", "html")
-    return proj.mapInPandas(
-        lambda it: _walk_batches(it, config, "errors"), ERROR_SCHEMA)
+    return pages.select("url", "html").mapInArrow(
+        lambda it: _extract(it, config, "e"), ERROR_SCHEMA)
 
 
 def extract_text_df(pages: DataFrame,
                     config: Config | None = None) -> DataFrame:
     """F1 text-concatenation rule per url (byte-identical invariant,
     Parser.pm:2541-2559), plus triple counts for metrics."""
-    proj = pages.select("url", "html")
-    return proj.mapInPandas(
-        lambda it: _walk_batches(it, config, "text"), TEXT_SCHEMA)
+    return pages.select("url", "html").mapInArrow(
+        lambda it: _extract(it, config, "x"), TEXT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -169,7 +169,9 @@ def pages_from_documents(documents: DataFrame,
 
 def _parquet_num_rows(path: str) -> int | None:
     """Exact row count from local parquet footer metadata (file or
-    directory of part files); None when the path isn't local."""
+    directory of top-level part files); None when the path isn't
+    local or no top-level part file matched (e.g. a partitioned
+    directory), so the caller falls back to a Spark count."""
     import os
 
     import pyarrow.parquet as pq
@@ -178,9 +180,11 @@ def _parquet_num_rows(path: str) -> int | None:
         if os.path.isfile(path):
             return pq.ParquetFile(path).metadata.num_rows
         if os.path.isdir(path):
-            return sum(
-                pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-                for f in os.listdir(path) if f.endswith(".parquet"))
+            parts = [os.path.join(path, f) for f in os.listdir(path)
+                     if f.endswith(".parquet")]
+            if parts:
+                return sum(pq.ParquetFile(f).metadata.num_rows
+                           for f in parts)
     except Exception:
         return None
     return None

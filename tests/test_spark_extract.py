@@ -29,6 +29,25 @@ def test_pages_schema(pages):
     assert pages.schema["warc_ts"].dataType.typeName() == "timestamp"
 
 
+def test_load_pages_partitioned_documents(spark, sf_dir, pages, tmp_path):
+    """A documents directory with no top-level part files (a
+    partitioned layout) must take the Spark count fallback: page html,
+    whose link targets depend on the document count, and the extracted
+    text stay byte-identical to the flat file's."""
+    (spark.read.parquet(f"{sf_dir}/documents.parquet")
+     .write.partitionBy("lang").parquet(str(tmp_path / "documents.parquet")))
+    nested = load_pages(spark, str(tmp_path)).cache()
+    cols = ["url", "html", "text"]
+    flat = pages.select(cols)
+    assert nested.select(cols).exceptAll(flat).count() == 0
+    assert flat.exceptAll(nested.select(cols)).count() == 0
+    tx = extract_text_df(nested).join(
+        nested.select("url", F.col("text").alias("expected")), "url")
+    assert tx.filter(F.col("text") != F.col("expected")).count() == 0
+    assert tx.count() == pages.count()
+    nested.unpersist()
+
+
 def test_triple_counts(pages, triples, sf_dir):
     n_pages = pages.count()
     # every page emits 8 or 9 triples (template 2 has no Article type)
@@ -152,21 +171,26 @@ def test_extract_all_plan_no_shuffle(spark, sf_dir):
     assert "Exchange" not in plan
 
 
-def test_extract_all_parse_failure_lands_in_errors(spark):
-    """A page whose parse raises must surface as a parse-failed error
-    row, never vanish (VERDICT r1 'what's wrong' #4)."""
-    from rdfa_spark.extract import extract_all, split_extracts
+@pytest.mark.parametrize("extractor,n_rows", [
+    ("extract_all", 1), ("extract_errors", 1), ("extract_text_df", 0)])
+def test_parse_failure_rule(spark, extractor, n_rows):
+    """A page whose parse raises must surface as exactly one
+    parse-failed error row wherever errors are emitted, never vanish
+    (VERDICT r1 'what's wrong' #4), and must emit no other row: no
+    triples and no text row."""
+    import rdfa_spark.extract as ex
 
     class _BrokenConfig:  # attribute access inside parse_rdfa raises
         __getattr__ = None
 
     rows = [("http://ex.com/x", b"<html><body>hi</body></html>")]
     df = spark.createDataFrame(rows, "url string, html binary")
-    _, errors, _ = split_extracts(extract_all(df, _BrokenConfig()))
-    got = errors.collect()
-    assert len(got) == 1
-    assert got[0].code == "parse-failed" and got[0].level == "error"
-    assert got[0].url == "http://ex.com/x"
+    got = getattr(ex, extractor)(df, _BrokenConfig()).collect()
+    assert len(got) == n_rows
+    for r in got:
+        assert r.code == "parse-failed" and r.level == "error"
+        assert r.url == "http://ex.com/x"
+        assert r.message
 
 
 def test_extract_triples_parse_failure_counted(spark):
@@ -187,11 +211,15 @@ def test_extract_triples_parse_failure_counted(spark):
     assert out.parse_failures.value == 2  # ...and nothing silent
 
 
-def test_arrow_batches_chunked_by_bytes(monkeypatch):
+@pytest.mark.parametrize("kinds", ["t", "e", "x", "tex"])
+def test_arrow_batches_chunked_by_bytes(monkeypatch, kinds):
     """A batch of max-size pages must not be materialized (or its
-    output accumulated) all at once: _walk_arrow_batches slices the
-    incoming RecordBatch by a byte cap, yielding one output batch
-    per slice, with triples identical to the unchunked run."""
+    output accumulated) all at once, whatever row kinds are emitted:
+    _extract slices the incoming RecordBatch by a byte cap, yielding
+    one output batch per kind per slice, with rows identical to the
+    unchunked run."""
+    from collections import Counter
+
     import pyarrow as pa
 
     import rdfa_spark.extract as ex
@@ -199,6 +227,7 @@ def test_arrow_batches_chunked_by_bytes(monkeypatch):
     page = ('<html xmlns="http://www.w3.org/1999/xhtml"><head>'
             '<title>t</title></head><body>'
             '<p about="#s" property="dc:title">Doc %d</p>'
+            '<span property="[_:x]">v</span>'      # one error row
             + "<!-- " + "x" * (5 << 20) + " -->"    # ~5MB page
             + "</body></html>")
     rows = [(f"http://x.com/{i}", (page % i).encode())
@@ -209,32 +238,48 @@ def test_arrow_batches_chunked_by_bytes(monkeypatch):
         names=["url", "html"])
 
     def run():
-        outs = list(ex._walk_arrow_batches(iter([rb]), None))
-        trips = sorted(
-            (u, s, p, o)
-            for b in outs
-            for u, s, p, o in zip(b.column(0).to_pylist(),
-                                  b.column(1).to_pylist(),
-                                  b.column(2).to_pylist(),
-                                  b.column(3).to_pylist()))
-        return outs, trips
+        outs = list(ex._extract(iter([rb]), None, kinds))
+        assert all(b.schema.names == ex._schema(kinds).names
+                   for b in outs)
+        got = Counter(tuple(r.values())
+                      for b in outs for r in b.to_pylist())
+        return outs, got
 
     # cap at ~8MB: 6x5MB pages -> ceil-ish chunks of 1-2 pages each
     monkeypatch.setattr(ex, "_ARROW_CHUNK_BYTES", 8 << 20)
-    outs_c, trips_c = run()
-    assert len(outs_c) >= 3, len(outs_c)
+    outs_c, rows_c = run()
+    assert len(outs_c) >= 3 * len(kinds), len(outs_c)
 
     monkeypatch.setattr(ex, "_ARROW_CHUNK_BYTES", 1 << 30)
-    outs_u, trips_u = run()
-    assert len(outs_u) == 1
-    assert trips_c == trips_u and len(trips_c) == 6
+    outs_u, rows_u = run()
+    assert len(outs_u) == len(kinds)
+    # two triples, one error and one text row per non-null page
+    per_page = sum({"t": 2, "e": 1, "x": 1}[k] for k in kinds)
+    assert rows_c == rows_u and sum(rows_u.values()) == 6 * per_page
 
     # a single page larger than the cap still processes (1-row chunk)
     monkeypatch.setattr(ex, "_ARROW_CHUNK_BYTES", 1024)
-    outs_t, trips_t = run()
-    assert trips_t == trips_u
+    outs_t, rows_t = run()
+    assert rows_t == rows_u
     # one chunk per oversize page + one for the trailing null row
-    assert len(outs_t) == 7
+    assert len(outs_t) == 7 * len(kinds)
+
+
+@pytest.mark.parametrize("rows", [[], [("http://ex.com/n", None)]],
+                         ids=["empty", "null-html"])
+@pytest.mark.parametrize("extractor,schema", [
+    ("extract_triples", "TRIPLE_SCHEMA"),
+    ("extract_errors", "ERROR_SCHEMA"),
+    ("extract_text_df", "TEXT_SCHEMA"),
+    ("extract_all", "EXTRACT_ALL_SCHEMA")])
+def test_extractors_empty_and_null_input(spark, extractor, schema, rows):
+    """No pages, or only null html: zero rows, exact declared schema."""
+    import rdfa_spark.extract as ex
+
+    df = spark.createDataFrame(rows, "url string, html binary")
+    out = getattr(ex, extractor)(df)
+    assert out.schema == getattr(ex, schema)
+    assert out.collect() == []
 
 
 def test_chunk_bounds_unit():
