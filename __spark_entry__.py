@@ -423,8 +423,9 @@ def q_event_sessions_stream(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     """§2.8 stateful streaming as a GRADED query: the
     applyInPandasWithState sessionizer replayed over the bounded
-    events table via Structured Streaming (availableNow,
-    one-file-per-micro-batch), checked against the SAME DuckDB
+    events table via Structured Streaming (availableNow: one data
+    micro-batch, then the timeout-only batch that closes every
+    session — see the r7 layout below), checked against the SAME DuckDB
     oracle as the batch window-function query — batch/stream parity
     is the oracle.  Sentinel far-future events (user_id -1) advance
     the watermark so every open session closes via event-time

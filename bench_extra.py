@@ -6,6 +6,13 @@ repeatable single-query timing).
 
     python bench_extra.py time  [--repeats N] [--noop] [q ...]
     python bench_extra.py plan  [--tag before] [q ...]
+    python bench_extra.py boundary [--repeats N]
+
+``boundary`` times the Python-task boundary at local[$SPARK_GRAFT_CPUS]
+(median of N=5 runs each, noop sink, workers warmed by an rdfa_spark
+import): an identity ``mapInArrow`` over 2 x cpus one-row partitions
+(the fixed per-task cost), an identity ``mapInArrow`` over the cached
+(url, html) pages, and a warm ``extract_triples``.
 
 Timing methodology mirrors bench.py's query phase exactly (same
 session confs, same worker warmup, same `.count()` action) so numbers
@@ -83,6 +90,47 @@ def cmd_time(names: list[str], repeats: int, noop: bool) -> None:
                       "queries": out}))
 
 
+def _identity(batches):
+    yield from batches
+
+
+def _noop_s(df) -> float:
+    t0 = time.time()
+    df.write.format("noop").mode("overwrite").save()
+    return round(time.time() - t0, 3)
+
+
+def cmd_boundary(repeats: int) -> None:
+    import statistics
+
+    from rdfa_spark.extract import extract_triples
+    from rdfa_spark.pages import load_pages
+
+    spark, _ = _session()
+    try:
+        pages = load_pages(spark, SF_DIR, partitions=4 * CPUS) \
+            .select("url", "html").localCheckpoint(eager=True)
+        n_pages = pages.count()
+        one_row = spark.range(0, 2 * CPUS, 1, 2 * CPUS)
+        jobs = {
+            "task_identity_s": one_row.mapInArrow(_identity, "id long"),
+            "pages_identity_s": pages.mapInArrow(_identity,
+                                                 pages.schema),
+            "extract_triples_s": extract_triples(pages),
+        }
+        _noop_s(jobs["extract_triples_s"])      # warm the kernel path
+        runs = {name: [_noop_s(df) for _ in range(repeats)]
+                for name, df in jobs.items()}
+    finally:
+        spark.stop()
+    out = {"cmd": "boundary", "cpus": CPUS, "sf_dir": SF_DIR,
+           "n_pages": n_pages, "task_partitions": 2 * CPUS,
+           "repeats": repeats}
+    out.update({name: statistics.median(r) for name, r in runs.items()})
+    out["runs"] = runs
+    print(json.dumps(out))
+
+
 def cmd_plan(names: list[str], tag: str) -> None:
     spark, queries = _session()
     dest = os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -115,7 +163,8 @@ def main() -> None:
         print(__doc__)
         return
     cmd, rest = args[0], args[1:]
-    repeats, noop, tag = 1, False, "before"
+    repeats = 5 if cmd == "boundary" else 1
+    noop, tag = False, "before"
     names: list[str] = []
     i = 0
     while i < len(rest):
@@ -134,7 +183,9 @@ def main() -> None:
             names.append(a); i += 1
     if not names:
         names = PRIMARY + SECONDARY
-    if cmd == "time":
+    if cmd == "boundary":
+        cmd_boundary(repeats)
+    elif cmd == "time":
         cmd_time(names, repeats, noop)
     elif cmd == "plan":
         cmd_plan(names, tag)

@@ -10,6 +10,13 @@ Re-expresses the extraction semantics of the reference RDFa parser
                   materialize with lineage + checkpointed resume
 * ``functions/``  text analysis + embedding similarity ops
 * ``streaming/``  incremental extraction via Structured Streaming
+* ``_worker``     Python-worker start-up: stat-guarded zipimport
+                  invalidation, installed only inside a Spark task
 """
 
 __version__ = "0.1.0"
+
+from rdfa_spark import _worker
+
+# inside a PySpark task: stop every task re-reading pyspark.zip
+_worker.install()

@@ -154,6 +154,19 @@ def _scored_pairs_schema(items, queries, id_col, query_id_col):
     ])
 
 
+def _pairs_batch(arrow_schema, qids, nids, scores):
+    """One (query, neighbor, score) kernel batch typed by the declared
+    schema: numpy infers float64 for an empty query-id array and
+    int64 for an int query id, and Spark reads Arrow columns by the
+    declared type without casting."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [pa.array(col, type=f.type)
+         for col, f in zip((qids, nids, scores), arrow_schema)],
+        schema=arrow_schema)
+
+
 def _topk_rank(scored, query_id_col, k):
     w = (Window.partitionBy(query_id_col)
          .orderBy(F.col("score").desc(), F.col("neighbor_id").asc()))
@@ -184,13 +197,14 @@ def cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
         if dim is None:
             raise ValueError("impl='kernel' requires dim")
         import numpy as np
-        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         qids, Q, qn = _collect_queries(queries, query_id_col,
                                        vec_col, dim)
         qid_arr = np.array(qids)
         out_schema = _scored_pairs_schema(items, queries, id_col,
                                           query_id_col)
+        arrow_schema = to_arrow_schema(out_schema)
         it = items.select(F.col(id_col).alias("neighbor_id"),
                           _as_double(vec_col).alias("_ivec"))
 
@@ -204,11 +218,11 @@ def cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
                     _seq_norm_np(V), qn)
                 keep = ids[:, None] != qid_arr[None, :]
                 nb, nq = scores.shape
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.tile(qid_arr, nb)[keep.ravel()]),
-                     pa.array(np.repeat(ids, nq)[keep.ravel()]),
-                     pa.array(scores.ravel()[keep.ravel()])],
-                    names=[query_id_col, "neighbor_id", "score"])
+                yield _pairs_batch(
+                    arrow_schema,
+                    np.tile(qid_arr, nb)[keep.ravel()],
+                    np.repeat(ids, nq)[keep.ravel()],
+                    scores.ravel()[keep.ravel()])
 
         scored = it.mapInArrow(score_batches, out_schema)
         return _topk_rank(scored, query_id_col, k)
@@ -358,7 +372,7 @@ def lsh_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
         if dim is None:
             raise ValueError("impl='kernel' requires dim")
         import numpy as np
-        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         S = np.array([_plane_signs_py(p, dim)
                       for p in range(n_planes)])
@@ -377,6 +391,7 @@ def lsh_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
                 probe_map.setdefault(key, []).append(j)
         out_schema = _scored_pairs_schema(items, queries, id_col,
                                           query_id_col)
+        arrow_schema = to_arrow_schema(out_schema)
         it = items.select(F.col(id_col).alias("neighbor_id"),
                           _as_double(vec_col).alias("_ivec"))
 
@@ -407,11 +422,9 @@ def lsh_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
                         scores.ravel()[keep]))
                 if not outs:
                     continue
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate([o[0] for o in outs])),
-                     pa.array(np.concatenate([o[1] for o in outs])),
-                     pa.array(np.concatenate([o[2] for o in outs]))],
-                    names=[query_id_col, "neighbor_id", "score"])
+                yield _pairs_batch(
+                    arrow_schema,
+                    *(np.concatenate(c) for c in zip(*outs)))
 
         scored = it.mapInArrow(score_batches, out_schema)
         return _topk_rank(scored, query_id_col, k)
@@ -548,7 +561,7 @@ def ivf_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
         if dim is None:
             raise ValueError("impl='kernel' requires dim")
         import numpy as np
-        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         C = np.array([vec for _, vec in seeds])      # cell-asc order
         cn = _seq_norm_np(C)
@@ -564,6 +577,7 @@ def ivf_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
                 cell_map.setdefault(c, []).append(j)
         out_schema = _scored_pairs_schema(items, queries, id_col,
                                           query_id_col)
+        arrow_schema = to_arrow_schema(out_schema)
         it2 = items.select(F.col(id_col).alias("neighbor_id"),
                            _as_double(vec_col).alias("_ivec"))
 
@@ -594,11 +608,9 @@ def ivf_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
                         scores.ravel()[keep]))
                 if not outs:
                     continue
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate([o[0] for o in outs])),
-                     pa.array(np.concatenate([o[1] for o in outs])),
-                     pa.array(np.concatenate([o[2] for o in outs]))],
-                    names=[query_id_col, "neighbor_id", "score"])
+                yield _pairs_batch(
+                    arrow_schema,
+                    *(np.concatenate(c) for c in zip(*outs)))
 
         scored = it2.mapInArrow(score_batches, out_schema)
         return _topk_rank(scored, query_id_col, k)

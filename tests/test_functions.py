@@ -74,6 +74,46 @@ def test_ann_kernel_bit_identical_to_expr(spark, emb, sf_dir):
     assert g == h and g
 
 
+@pytest.mark.parametrize("queries", ["empty", "int_ids"])
+@pytest.mark.parametrize("op", ["cosine", "lsh", "ivf"])
+def test_ann_kernel_output_typed_by_schema(spark, emb, sf_dir, op,
+                                           queries):
+    """Kernel batches carry the declared column types, not numpy's:
+    an empty query set gives 0 rows with the declared schema, and an
+    int query id (numpy infers int64) stays int."""
+    from rdfa_spark.functions.similarity import (embedding_dim,
+                                                 ivf_cosine_topk)
+    dim = embedding_dim(f"{sf_dir}/embeddings.parquet")
+    if queries == "empty":
+        q = emb.filter(F.lit(False)) \
+               .select(F.col("vec_id").alias("query_id"), "embedding")
+        qtype = "bigint"
+    else:
+        q = emb.filter(F.col("vec_id") % 100 == 0) \
+               .select(F.col("vec_id").cast("int").alias("query_id"),
+                       "embedding")
+        qtype = "int"
+
+    def run(q, impl):
+        kw = {} if impl == "expr" else {"dim": dim, "impl": impl}
+        if op == "cosine":
+            return cosine_topk(emb, q, k=5, **kw)
+        if op == "lsh":
+            return lsh_cosine_topk(emb, q, k=5, n_planes=6,
+                                   multiprobe=2, **kw)
+        return ivf_cosine_topk(emb, q, k=5, n_centroids=8, nprobe=4,
+                               **kw)
+
+    out = run(q, "kernel")
+    assert [(f.name, f.dataType.simpleString())
+            for f in out.schema.fields] == [
+        ("query_id", qtype), ("rank", "int"),
+        ("neighbor_id", "bigint"), ("score", "double")]
+    rows = sorted(map(tuple, out.collect()))
+    assert rows == sorted(map(tuple, run(q, "expr").collect()))
+    assert bool(rows) == (queries == "int_ids")
+
+
 def test_lsh_ann_recall_vs_exact(spark, emb):
     """LSH candidates within the query's bucket must agree with
     exact search wherever they overlap; recall@1 reported sane."""
